@@ -14,9 +14,11 @@ Reimplements the reference's catalog surface natively on `spark.catalog`:
   — `/root/reference/tests/dataplex/test_mcp.py:160-189`.
 
 Catalog metadata is inherently tiny (hundreds of rows for thousands of
-tables), so rows are assembled driver-side from `spark.catalog` and returned
-as a DataFrame — the scan/shuffle machinery is irrelevant here; what matters
-at scale is that we read only metadata, never data files.
+tables), so rows are assembled, filtered, ordered and paged driver-side from
+`spark.catalog`, and each tool hands Spark one finished relation built by
+`session.local_frame`: an Arrow-built JVM `LocalRelation` (`LocalTableScan`
+in the plan). Serving it reads no data files and runs no PySpark Python
+worker; what matters at scale is that we read only metadata.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from database_toolbox_spark.session import local_frame
 
 # Row shape contract: images/redshift/redshift.yaml:14-22.
 LIST_TABLES_SCHEMA = T.StructType(
@@ -64,36 +68,48 @@ def _visible_tables(spark: SparkSession) -> list[tuple[str, str]]:
     ]
 
 
-def list_tables(
-    spark: SparkSession, table_names: str | None = "", schema_name: str = "default"
-) -> DataFrame:
-    """Redshift-dialect `list_tables`: one row per column, ordered."""
+def column_rows(schema: str, table: str, struct: T.StructType) -> list[tuple]:
+    """The LIST_TABLES_SCHEMA rows of one table: one per column, in
+    column order."""
+    return [
+        (
+            schema,
+            table,
+            f.name,
+            pos,
+            f.dataType.simpleString(),
+            "YES" if f.nullable else "NO",
+            None,  # temp views carry no column defaults
+        )
+        for pos, f in enumerate(struct.fields, start=1)
+    ]
+
+
+def _catalog_rows(
+    spark: SparkSession, table_names: str | None, schema_name: str
+) -> list[tuple]:
+    """list_tables' rows, ordered by (schema, table, position)."""
     wanted = _csv_names(table_names)
     rows = []
     for namespace, name in _visible_tables(spark):
         if wanted is not None and name not in wanted:
             continue
-        schema = namespace or schema_name
         # spark.table(name).schema gives the identical (name, simpleString,
         # nullable) triple as catalog.listColumns but ~30x faster — one
         # analyzed-plan lookup instead of a full catalog RPC per table
-        for pos, f in enumerate(spark.table(name).schema.fields, start=1):
-            rows.append(
-                (
-                    schema,
-                    name,
-                    f.name,
-                    pos,
-                    f.dataType.simpleString(),
-                    "YES" if f.nullable else "NO",
-                    None,  # temp views carry no column defaults
-                )
-            )
-    # rows are already driver-local: sort here (ASCII names — Python and
-    # UTF8-binary order agree) instead of paying a sort exchange for a
-    # ~70-row result
+        rows += column_rows(namespace or schema_name, name, spark.table(name).schema)
+    # ASCII names: Python and UTF8-binary order agree
     rows.sort(key=lambda r: (r[0], r[1], r[3]))
-    return spark.createDataFrame(rows, LIST_TABLES_SCHEMA)
+    return rows
+
+
+def list_tables(
+    spark: SparkSession, table_names: str | None = "", schema_name: str = "default"
+) -> DataFrame:
+    """Redshift-dialect `list_tables`: one row per column, ordered."""
+    return local_frame(
+        spark, _catalog_rows(spark, table_names, schema_name), LIST_TABLES_SCHEMA
+    )
 
 
 def list_table_names(spark: SparkSession, table_names: str | None = "") -> DataFrame:
@@ -105,7 +121,8 @@ def list_table_names(spark: SparkSession, table_names: str | None = "") -> DataF
         for _, name in _visible_tables(spark)
         if wanted is None or name in wanted
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n,) for n in names],
         T.StructType([T.StructField("table_name", T.StringType(), False)]),
     )
@@ -117,14 +134,20 @@ def search_entries(
     """Dataplex-style catalog search: substring match on table/column names,
     `*` (or empty) matches everything; paged via LIMIT
     (tests/dataplex/test_mcp.py:160-189 calls {"query": "*", "page_size": 1})."""
-    cat = list_tables(spark, table_names="")
+    n = int(page_size)
+    if n < 0:
+        raise ValueError(f"page_size must be >= 0, got {n}")
+    rows = _catalog_rows(spark, "", "default")
     if query and query not in ("*", ""):
         q = query.lower().strip("*")
-        cat = cat.filter(
-            F.lower(F.col("table_name")).contains(q)
-            | F.lower(F.col("column_name")).contains(q)
-        )
-    return cat.orderBy("table_name", "column_position").limit(int(page_size))
+        rows = [r for r in rows if q in r[1].lower() or q in r[2].lower()]
+    rows.sort(key=lambda r: (r[1], r[3]))
+    return local_frame(spark, rows[:n], LIST_TABLES_SCHEMA)
+
+
+LOOKUP_ENTRY_SCHEMA = T.StructType(
+    [T.StructField("entry_name", T.StringType(), False), *LIST_TABLES_SCHEMA.fields]
+)
 
 
 def lookup_entry(spark: SparkSession, entry: str) -> DataFrame:
@@ -134,15 +157,13 @@ def lookup_entry(spark: SparkSession, entry: str) -> DataFrame:
     so this keeps the list_tables column contract plus the entry name):
     full per-column metadata for ONE catalog entry. Unknown entries raise —
     the lookup tool's error contract, vs search's empty result."""
-    cat = list_tables(spark, table_names=entry)
-    rows = cat.collect()  # guard-exempt: bounded driver fetch (one table's columns)
+    rows = _catalog_rows(spark, entry, "default")
     if not rows:
         raise KeyError(f"unknown catalog entry {entry!r}")
-    return cat.select(
-        F.concat(F.col("schema_name"), F.lit("."), F.col("table_name"))
-        .alias("entry_name"),
-        "*",
-    ).orderBy("column_position")
+    rows.sort(key=lambda r: r[3])
+    return local_frame(
+        spark, [(f"{r[0]}.{r[1]}", *r) for r in rows], LOOKUP_ENTRY_SCHEMA
+    )
 
 
 def search_aspect_types(

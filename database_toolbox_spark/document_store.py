@@ -44,12 +44,15 @@ catalog metadata only. Nothing collects row data to the driver.
 from __future__ import annotations
 
 import json
+from datetime import date, datetime, timezone
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from database_toolbox_spark.gate import StatementDenied
+from database_toolbox_spark.session import local_frame, report_sort
 
 # collection → document-id column(s). Composite keys join with '-' in the
 # document path (Firestore ids are opaque strings, so 'l_orderkey-l_linenumber'
@@ -92,14 +95,13 @@ def list_collections(spark: SparkSession, parent_path: str = "") -> DataFrame:
     signature; this engine's collections are all root-level, so any
     non-empty parent yields an empty listing. Catalog metadata only —
     no data files are read."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     rows = [
         (name, "-".join(ids))
         for name, ids in sorted(COLLECTION_IDS.items())
         if not parent_path and _registered(spark, name)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         T.StructType(
             [
@@ -147,10 +149,10 @@ def get_documents(spark: SparkSession, document_paths: str) -> DataFrame:
 
     Scale shape: ids group by collection into typed IN predicates on the
     key column(s) — pushed to the parquet scan (row-group pruning) — and
-    the per-collection matches union; the request list itself is a tiny
-    broadcast-joined relation, never a driver-side loop over lookups."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
+    the per-collection matches union into one aggregate that is broadcast
+    to the request list, never a driver-side loop over lookups.
+    Every requested path yields exactly one row, so the output is bounded
+    by the driver-held request list and sorts locally (report_sort)."""
     try:
         paths = json.loads(document_paths)
         if not isinstance(paths, list):
@@ -178,7 +180,7 @@ def get_documents(spark: SparkSession, document_paths: str) -> DataFrame:
             except ValueError:
                 pass  # malformed id → lookup miss
 
-    found: DataFrame | None = None
+    matches: DataFrame | None = None
     for coll, keys in by_coll.items():
         id_cols = COLLECTION_IDS[coll]
         df = spark.table(coll)
@@ -191,24 +193,26 @@ def get_documents(spark: SparkSession, document_paths: str) -> DataFrame:
                 for c, v in zip(id_cols, key):
                     conj = conj & (F.col(c) == F.lit(v))
                 pred = pred | conj
-        # a path denotes AT MOST ONE document: if the declared key is
-        # non-unique in the backing table (the fixture's lineitem has
-        # up-to-5x duplicate (l_orderkey, l_linenumber)), collapse to the
-        # lexicographically-least JSON rendering — deterministic on any
-        # partitioning
-        part = (
-            df.where(pred)
-            .select(
-                _path_col(coll, id_cols),
-                F.to_json(F.struct(*df.columns)).alias("data"),
-            )
-            .groupBy("doc_path")
-            .agg(F.min("data").alias("data"))
+        part = df.where(pred).select(
+            _path_col(coll, id_cols),
+            F.to_json(F.struct(*df.columns)).alias("data"),
         )
-        found = part if found is None else found.unionByName(part)
+        matches = part if matches is None else matches.unionByName(part)
+    # a path denotes AT MOST ONE document: if the declared key is
+    # non-unique in the backing table (the fixture's lineitem has up-to-5x
+    # duplicate (l_orderkey, l_linenumber)), collapse to the
+    # lexicographically-least JSON rendering — deterministic on any
+    # partitioning. Paths carry their collection prefix, so one aggregate
+    # (one shuffle) over the union serves every collection.
+    found = (
+        None
+        if matches is None
+        else matches.groupBy("doc_path").agg(F.min("data").alias("data"))
+    )
 
-    req = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(paths)],
+    req = local_frame(
+        spark,
+        list(enumerate(paths)),
         T.StructType(
             [
                 T.StructField("req_order", T.IntegerType(), False),
@@ -220,11 +224,10 @@ def get_documents(spark: SparkSession, document_paths: str) -> DataFrame:
         out = req.withColumn("data", F.lit(None).cast("string"))
     else:
         out = req.join(found, "doc_path", "left")
-    return (
-        out.withColumn("found", F.col("data").isNotNull())
-        .orderBy("req_order")
-        .select("doc_path", "found", "data")
-    )
+    # bounded by the driver-held request list: exactly one row per path
+    return report_sort(
+        out.withColumn("found", F.col("data").isNotNull()), "req_order"
+    ).select("doc_path", "found", "data")
 
 
 def _typed_lit(types: dict, field: str, value: Any):
@@ -445,14 +448,13 @@ def get_rules(spark: SparkSession) -> DataFrame:
     engine's equivalent is the statement-class gate, so the tool returns
     the live ALLOWED/DENIED class tables (the policy callers are subject
     to through execute_sql and the write-tool denials)."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     from database_toolbox_spark import gate  # noqa: PLC0415
 
     rows = [("allow", c) for c in sorted(gate.ALLOWED_CLASSES)] + [
         ("deny", c) for c in sorted(gate.DENIED_CLASSES)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         T.StructType(
             [
@@ -549,8 +551,10 @@ def _deny(name: str) -> None:
 def _coerce_row(types: dict, doc: dict, collection: str) -> dict:
     """Validate a document dict against the collection schema and coerce
     JSON scalars onto the column types (ints for integer columns, floats
-    for doubles). Unknown fields are rejected — a document store with a
-    declared schema is a table, not a blob bucket."""
+    for doubles, ISO-8601 strings for date and timestamp columns — a
+    timestamp without an offset is UTC, the session time zone). Unknown
+    fields are rejected — a document store with a declared schema is a
+    table, not a blob bucket."""
     out: dict[str, Any] = {}
     for field, value in doc.items():
         if field not in types:
@@ -564,6 +568,13 @@ def _coerce_row(types: dict, doc: dict, collection: str) -> dict:
             out[field] = int(value)
         elif t in ("double", "float") or t.startswith("decimal"):
             out[field] = float(value)
+        elif t == "date" and isinstance(value, str):
+            out[field] = date.fromisoformat(value)
+        elif t in ("timestamp", "timestamp_ntz") and isinstance(value, str):
+            ts = datetime.fromisoformat(value)
+            if t == "timestamp" and ts.tzinfo is None:
+                ts = ts.replace(tzinfo=timezone.utc)
+            out[field] = ts
         else:
             out[field] = value
     return out
@@ -609,8 +620,8 @@ def add_documents(
                     f"collection {collection!r}"
                 )
         rows.append(row)
-    new = spark.createDataFrame(
-        [tuple(r.get(c) for c in df.columns) for r in rows], df.schema
+    new = local_frame(
+        spark, [tuple(r.get(c) for c in df.columns) for r in rows], df.schema
     )
     df.unionByName(new).createOrReplaceTempView(collection)
     _persist_overlay(spark, collection)
@@ -654,9 +665,8 @@ def update_document(
     ])
     out.createOrReplaceTempView(collection)
     _persist_overlay(spark, collection)
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(document_path, "updated", n)],
         T.StructType([
             T.StructField("doc_path", T.StringType(), False),
@@ -701,9 +711,8 @@ def delete_documents(
         pred = pred | conj
     df.where(~pred).createOrReplaceTempView(collection)
     _persist_overlay(spark, collection)
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p, "deleted") for p in paths],
         T.StructType([
             T.StructField("doc_path", T.StringType(), False),

@@ -25,7 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_tables
+from database_toolbox_spark.session import load_tables, local_frame
 
 
 @dataclass(frozen=True)
@@ -214,8 +214,8 @@ LOOKS: dict[int, Look] = {
 
 def get_models(spark: SparkSession) -> DataFrame:
     """Looker get_models: the single Spark model and its explore count."""
-    return spark.createDataFrame(
-        [(MODEL, len(EXPLORES))], "model string, explore_count int"
+    return local_frame(
+        spark, [(MODEL, len(EXPLORES))], "model string, explore_count int"
     )
 
 
@@ -223,8 +223,8 @@ def get_explores(spark: SparkSession, model: str = MODEL) -> DataFrame:
     if model != MODEL:
         raise KeyError(f"unknown model {model!r}")
     rows = [(MODEL, e.name, e.description) for e in EXPLORES.values()]
-    return spark.createDataFrame(
-        rows, "model string, explore string, description string"
+    return local_frame(
+        spark, rows, "model string, explore string, description string"
     )
 
 
@@ -234,8 +234,8 @@ def _fields_df(spark: SparkSession, explore: str, kind: str) -> DataFrame:
         raise KeyError(f"unknown explore {explore!r}")
     src = spec.dimensions if kind == "dimension" else spec.measures
     rows = [(explore, name, kind, sql) for name, sql in sorted(src.items())]
-    return spark.createDataFrame(
-        rows, "explore string, field string, kind string, sql string"
+    return local_frame(
+        spark, rows, "explore string, field string, kind string, sql string"
     )
 
 
@@ -252,8 +252,8 @@ def get_looks(spark: SparkSession) -> DataFrame:
         (lk.look_id, lk.title, lk.explore, json.dumps(list(lk.fields)))
         for lk in LOOKS.values()
     ]
-    return spark.createDataFrame(
-        rows, "look_id int, title string, explore string, fields string"
+    return local_frame(
+        spark, rows, "look_id int, title string, explore string, fields string"
     )
 
 

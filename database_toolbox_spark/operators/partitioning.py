@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import money
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_table, load_tables
+from database_toolbox_spark.session import load_table, load_tables, local_frame
 
 _STATUS_DIM = [("O", "open"), ("F", "finished"), ("P", "pending")]
 
@@ -42,6 +42,20 @@ def ensure_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .parquet(path)
         )
+    return path
+
+
+def ensure_status_dim(spark: SparkSession, sf_dir: str) -> str:
+    """The status dimension as a parquet table beside the partitioned
+    copy, as a lakehouse dimension would be stored. DPP needs the
+    dimension's filter to reach the physical plan: over in-memory rows the
+    optimizer evaluates the filter at plan time, leaving no selective
+    runtime filter to prune with."""
+    path = ensure_partitioned_orders(spark, sf_dir) + "_status_dim"
+    if not os.path.isdir(path):
+        local_frame(spark, _STATUS_DIM, "status string, label string").write.mode(
+            "overwrite"
+        ).parquet(path)
     return path
 
 
@@ -65,7 +79,7 @@ def dynamic_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension filtered on a non-partition attribute."""
     path = ensure_partitioned_orders(spark, sf_dir)
     orders = spark.read.parquet(path)
-    dim = spark.createDataFrame(_STATUS_DIM, "status string, label string")
+    dim = spark.read.parquet(ensure_status_dim(spark, sf_dir))
     open_dim = F.broadcast(dim.filter(F.col("label") == "open"))
     return (
         orders.join(open_dim, orders.o_orderstatus == open_dim.status)

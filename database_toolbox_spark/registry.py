@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark import catalog as _catalog
 from database_toolbox_spark import executor as _executor
+from database_toolbox_spark.session import local_frame
 
 
 @dataclass(frozen=True)
@@ -548,7 +549,8 @@ def _list_jdbc_sources_tool(spark: SparkSession) -> DataFrame:
     rows = [
         (name, src.driver_class) for name, src in sorted(_JDBC_SOURCES.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         T.StructType(
             [
@@ -593,7 +595,6 @@ def _register_jdbc_table_tool(
     view/partitioning to use."""
     import re as _re  # noqa: PLC0415
 
-    from database_toolbox_spark import catalog as _cat  # noqa: PLC0415
     from database_toolbox_spark.sources.readers import read_jdbc  # noqa: PLC0415
 
     if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", view):
@@ -610,12 +611,11 @@ def _register_jdbc_table_tool(
         upper_bound=int(upper_bound) if upper_bound else None,
     )
     df.createOrReplaceTempView(view)
-    rows = [
-        ("default", view, f.name, pos, f.dataType.simpleString(),
-         "YES" if f.nullable else "NO", None)
-        for pos, f in enumerate(df.schema.fields, start=1)
-    ]
-    return spark.createDataFrame(rows, _cat.LIST_TABLES_SCHEMA)
+    return local_frame(
+        spark,
+        _catalog.column_rows("default", view, df.schema),
+        _catalog.LIST_TABLES_SCHEMA,
+    )
 
 
 register(

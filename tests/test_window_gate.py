@@ -103,6 +103,7 @@ RS_SITE = re.compile(r"\breport_sort\(")
 RS_ALLOWED = {
     "operators/dedup.py": 3,       # jaccard_prefix / semdedup / containment
     "operators/fingerprints.py": 1,  # idf_cosine_dup_pairs
+    "document_store.py": 1,        # get_documents: one row per request
 }
 
 
